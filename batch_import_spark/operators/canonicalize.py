@@ -24,6 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# The one small-data bound of the graph operators: edge (or pair) sets
+# of at most this many rows are collected and solved on the driver —
+# here by union-find, in operators/graph_stats.py by the iterative
+# family's numpy twins. 500k string/long pairs ≈ tens of MB on the
+# heap — conservative vs the broadcast-join budget these paths replace.
+# Read at call time, so tests can lower it to force the distributed
+# paths.
+DRIVER_GRAPH_THRESHOLD = 500_000
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect strictly-larger neighbors of u to min(Γ⁺(u))."""
@@ -103,7 +112,7 @@ def connected_components(
     across a large+small round.
 
     Edge sets at or under ``driver_threshold`` (default
-    DRIVER_CC_THRESHOLD; the count is already paid to size the
+    DRIVER_GRAPH_THRESHOLD; the count is already paid to size the
     iteration's shuffles) take a DRIVER-SIDE union-find — the CC
     analog of a broadcast join, the same dispatch canonical_mapping
     has always used for vocabulary-bounded inputs — skipping the
@@ -129,7 +138,7 @@ def connected_components(
     # session's width. ~1M edges per partition.
     n_edges = e.count()
     if driver_threshold is None:
-        driver_threshold = DRIVER_CC_THRESHOLD
+        driver_threshold = DRIVER_GRAPH_THRESHOLD
     if n_edges <= driver_threshold:
         out = _driver_cc_edges(spark, e)
         jmap = sc0._jsc.getPersistentRDDs()
@@ -188,17 +197,11 @@ def connected_components(
     return members.union(roots).distinct()
 
 
-# pairs that comfortably union-find in driver memory: 500k string/long
-# pairs ≈ tens of MB on the heap — conservative vs the broadcast-join
-# budget this path replaces
-DRIVER_CC_THRESHOLD = 500_000
-
-
 def canonical_mapping(
     nodes_with_keys: DataFrame,
     node_col: str,
     key_col: str,
-    driver_threshold: int = DRIVER_CC_THRESHOLD,
+    driver_threshold: int | None = None,
 ) -> DataFrame:
     """CC over 'same key ⇒ same canonical node' equivalence.
 
@@ -212,6 +215,8 @@ def canonical_mapping(
         F.col(node_col).alias("node_id"), F.col(key_col).alias("k")
     ).distinct()
     n_pairs = pairs_df.count()
+    if driver_threshold is None:
+        driver_threshold = DRIVER_GRAPH_THRESHOLD
     if n_pairs <= driver_threshold:
         return _driver_union_find(pairs_df)
 

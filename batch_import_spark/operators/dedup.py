@@ -190,7 +190,9 @@ def minhash_near_duplicates(
     sides each re-evaluated the whole signature aggregation —
     plan-audited 2x — for the identical pair set.)
     Results are exact w.r.t. the threshold (LSH affects recall only
-    through banding parameters). ``threshold`` must be > 0 (the
+    through banding parameters). ``id_col`` must be unique among
+    non-null ids: a repeated id raises (USER_RAISED_EXCEPTION) when
+    the result is computed. ``threshold`` must be > 0 (the
     verify join drops zero-intersection candidates by construction).
     ``max_bucket_size`` is the degenerate-band guard (see
     operators.buckets) and is ON by default (10k): bands with more
@@ -224,15 +226,33 @@ def minhash_near_duplicates(
     # explode_outer: shingle arrays are non-empty by construction, and
     # plain explode makes the optimizer infer a size>0 filter that
     # re-evaluates the generator input per predicate.
-    exploded = arr.select("id", F.explode_outer("sh").alias("shingle"))
+    exploded = arr.select(
+        "id", F.size("sh").alias("_n"), F.explode_outer("sh").alias("shingle")
+    )
     sigs = exploded.groupBy("id").agg(
         *[
             F.min(F.xxhash64(F.col("shingle"), F.lit(7 + i))).alias(f"_h{i}")
             for i in range(num_hashes)
-        ]
+        ],
+        # an id on several rows explodes more shingles than any one of
+        # its (non-empty) shingle sets holds
+        (F.count(F.lit(1)) > F.max("_n")).alias("_dup"),
+    )
+    # the unique-id contract, checked inside the signature aggregate
+    # (no extra job or shuffle): a repeated id would pair with the
+    # signature of its rows' union but verify once per row
+    repeated = F.raise_error(
+        F.concat(
+            F.lit("minhash_near_duplicates: id "),
+            F.col("id").cast("string"),
+            F.lit(" is on more than one row"),
+        )
     )
     base = sigs.select(
-        "id", F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig")
+        "id",
+        F.when(F.col("_dup") & F.col("id").isNotNull(), repeated)
+        .otherwise(F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]))
+        .alias("sig"),
     )
     # band join on (band, id) ONLY — exploding the shingle arrays
     # num_bands× through the self-join multiplies shuffle volume by

@@ -1,5 +1,7 @@
 """Fulltext-index analog (A8) + reference config parsing (G3)."""
 
+import os
+
 from batch_import_spark.config import load_config
 from batch_import_spark.operators.fulltext import build_fulltext_postings, fulltext_lookup
 
@@ -90,8 +92,9 @@ def test_index_value_keeps_uri_files():
 
 def test_config_parses_reference_sample(spark):
     """ConfigTest.java:53-120 semantics on the reference's own
-    sample/batch.properties."""
-    with open("/root/reference/sample/batch.properties") as f:
+    sample/batch.properties (rebuilt in tests/fixtures/reference_sample)."""
+    path = os.path.join(os.path.dirname(__file__), "fixtures", "reference_sample", "batch.properties")
+    with open(path) as f:
         text = f.read()
     cfg = load_config(
         text,

@@ -2,14 +2,19 @@
 
 The closest thing to the reference's integration test
 (ImporterIntegrationTest.java:23-49 runs generator → import →
-ConsistencyCheckTool); here the oracle is the known content of
-/root/reference/sample (readme.md:56-76).
+ConsistencyCheckTool); here the oracle is the known content of the
+reference's sample/ directory (readme.md:56-76), rebuilt in
+tests/fixtures/reference_sample: the readme's tab-separated nodes
+split over nodes.csv and nodes2.csv under one header, rels.csv with
+both endpoints looked up in the ``users`` index.
 """
+
+import os
 
 from batch_import_spark.operators.graph_import import import_nodes, import_relationships
 from batch_import_spark.sources.csv_source import read_reference_csv
 
-SAMPLE = "/root/reference/sample"
+SAMPLE = os.path.join(os.path.dirname(__file__), "fixtures", "reference_sample")
 
 
 def test_reference_sample_end_to_end(spark):

@@ -117,3 +117,21 @@ def test_pair_set_matches_without_cap(corpus):
     assert new_rows == _collect(old)
     # without the cap the hot cluster's pairs ARE present
     assert any(a >= 100 for a, b, j in new_rows)
+
+
+def test_repeated_doc_id_is_rejected(spark):
+    """doc_id must be unique: a repeated id raises instead of emitting
+    (1, 2) once per row of doc 1 at two different Jaccards. Null ids
+    stay tolerated (they never verify-join)."""
+    base = "spark shuffles data between stages when a wide dependency appears"
+    df = spark.createDataFrame(
+        [(1, base + " v0"), (1, base + " v1"), (2, base + " v0")], ["doc_id", "text"]
+    )
+    pairs = minhash_near_duplicates(df, num_hashes=16, num_bands=8, threshold=0.8)
+    with pytest.raises(Exception, match="id 1 is on more than one row"):
+        pairs.collect()
+    ok = spark.createDataFrame(
+        [(None, base + " v0"), (None, base + " v1"), (1, base + " v0"), (2, base + " v0")],
+        "doc_id bigint, text string",
+    )
+    assert _collect(minhash_near_duplicates(ok, num_hashes=16, num_bands=8)) == [(1, 2, 1.0)]
